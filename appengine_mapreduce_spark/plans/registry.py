@@ -62,64 +62,35 @@ _CURATED_FIRST: tuple[str, ...] = (
     "cosine_topk", "ivf_topk", "minhash_lsh_pairs",
     "phrases_demo", "q18_large_orders",
     "simhash_fingerprints", "decontaminate_overlap",
-    # ---- round-14 changed plans (re-witness at the new shape; every
-    # round-13 entry previously here has a green CORRECTNESS_r13 row,
-    # so those slots are free):
-    #   data_recipe_pack_stats / token_budget_packing /
-    #   packing_efficiency_stats — pack_by_token_budget switched to the
-    #   SHARDED window (VERDICT r13 ask #3: partition by
-    #   (lang, md5-shard(order_col)) so a dominant language no longer
-    #   funnels through one window partition; composite bin ids; oracle
-    #   replays the shard hash bit-exactly).
-    "data_recipe_pack_stats", "token_budget_packing",
-    "packing_efficiency_stats",
-    #   batch_ann_topk / hard_negatives_topk /
-    #   embedding_near_dup_pairs — sign-LSH bucketing went
-    #   DEPTH-adaptive (round-14 sf8 probe: the single-level split
-    #   saturates and pair growth re-goes quadratic once every extended
-    #   bucket is hot; near-dup pairs had FIXED buckets, measured 4x
-    #   pairs per doubling); oracles replay the corpus-count depth CASE.
-    "batch_ann_topk", "hard_negatives_topk", "embedding_near_dup_pairs",
-    # ---- RESERVED ROTATION BLOCK (VERDICT r11 ask #1 + ADVICE: fixed
-    # slots that new additions must NOT displace — guard-tested by
-    # tests/test_registry.py::test_rotation_reserved_block_in_window.
-    # Future rounds refresh the names from `tools/witness_ledger.py`
-    # but keep the block size >= 3.) This round (VERDICT r13 ask #1):
-    # the ENTIRE remaining r3-era tail (8, pre-named at round-13 close
-    # in this very block's comment) plus 14 family-diverse r4-era picks
-    # — the r3 bucket hits 0 and r4 drops 24→10:
-    "consecutive_longs", "dynamic_props_agg", "json_lines_roundtrip",
-    "line_input_offsets", "pii_scan_redact", "tfidf_top_terms",
-    "weekly_retention", "zip_line_records",
-    # ---- r4-era picks (witness_ledger r4 bucket, one per family where
-    # possible: video, cdc, pipeline, quality, dedup, sinks, jpeg,
-    # tpch, skew-join, semantic-dedup, sessionization, streaming —
-    # q12/q4 moved to _NEXT_ROTATION mid-round to make room for the
-    # depth-adaptive ANN re-witnesses above; footer_stats_orders
-    # likewise deferred for embedding_near_dup_pairs):
-    "avi_mjpeg_frame_decode", "cdc_snapshot_diff",
-    "corpus_build_pipeline", "data_quality_checks", "dedup_incremental",
-    "jpeg_progressive_decode",
-    "salted_join_priority_revenue", "semantic_dedup_keepers",
-    "session_window_stats", "streaming_dedup_replay",
-    "zorder_layout_scan",
+    # ---- then the rotation block, appended below (_ROTATION_RESERVED).
 )
 
-# Rotation slots that later additions may never displace (see the
-# reserved block comment above; tests/test_registry.py enforces both
-# membership in the checked window and a minimum size). Refreshed at
-# round-14 open from `tools/witness_ledger.py`.
+# Rotation slots that later additions may never displace
+# (VERDICT r11 ask #1 + ADVICE; tests/test_registry.py enforces both
+# membership in the checked window and a minimum size of 3). Refreshed
+# from `tools/witness_ledger.py`: every slot of the previous block has a
+# green CORRECTNESS_r15 row, so the block now holds the whole r4-era tail
+# (13 names, gap 11 against r15, deferred here once already) plus 12
+# family-diverse r5-era picks (gap 10); the other 12 r5-era names are
+# deferred to _NEXT_ROTATION.
 _ROTATION_RESERVED: tuple[str, ...] = (
-    "consecutive_longs", "dynamic_props_agg", "json_lines_roundtrip",
-    "line_input_offsets", "pii_scan_redact", "tfidf_top_terms",
-    "weekly_retention", "zip_line_records",
-    "avi_mjpeg_frame_decode", "cdc_snapshot_diff",
-    "corpus_build_pipeline", "data_quality_checks", "dedup_incremental",
-    "jpeg_progressive_decode",
-    "salted_join_priority_revenue", "semantic_dedup_keepers",
-    "session_window_stats", "streaming_dedup_replay",
-    "zorder_layout_scan",
+    # r4 era
+    "footer_stats_orders", "jpeg_progressive_color_decode",
+    "mp3_decode_meta", "q12_late_shipment_priority",
+    "q13_order_count_distribution", "q22_idle_customers",
+    "q4_order_priority", "q7_nation_volume", "q8_market_share",
+    "streaming_hourly_replay", "streaming_sessionize_replay",
+    "text_dedup_keepers", "winnow_doc_fingerprints",
+    # r5 era: layout, analytics, jpeg, audio, video, sampling, text,
+    # ANN, streaming join, tpch subquery, graph dedup, and q20 (whose
+    # plan changed in round 15)
+    "sorted_layout_scan", "customer_balance_quartiles",
+    "jpeg_decode_meta", "wav_decode_meta", "mp4_decode_meta",
+    "stratified_sample_by_lang", "token_stats_corpus",
+    "ann_sign_lsh_topk", "streaming_conversion_join_replay",
+    "q15_top_supplier", "dedup_clusters", "q20_promotion_suppliers",
 )
+_CURATED_FIRST += _ROTATION_RESERVED
 
 # Pre-named NEXT-round rotation picks (VERDICT r13 ask #2: make the
 # staleness ratchet green at every snapshot WITHOUT losing its teeth).
@@ -127,20 +98,14 @@ _ROTATION_RESERVED: tuple[str, ...] = (
 # staleness guard (tests/test_registry.py::test_witness_staleness_bounded)
 # lets a name listed here run at most ONE round past
 # MAX_STALENESS_ROUNDS; past that it must actually sit in the driver
-# window or the suite hard-fails. Round-15 picks, precomputed from
-# `tools/witness_ledger.py` at round-14 open: the 13 r4-era leftovers
-# after this round's 11 r4 rotations land (q12/q4 deferred here when the
-# depth-adaptive ANN re-witnesses took their window slots; refresh this
-# block plus _ROTATION_RESERVED, and re-run the ledger, at every round
-# open).
+# window or the suite hard-fails. Current picks: the 12 r5-era names
+# (gap 10 against r15) that did not fit the rotation block above.
 _NEXT_ROTATION: tuple[str, ...] = (
-    "footer_stats_orders",
-    "jpeg_progressive_color_decode", "mp3_decode_meta",
-    "q12_late_shipment_priority", "q13_order_count_distribution",
-    "q22_idle_customers", "q4_order_priority",
-    "q7_nation_volume", "q8_market_share", "streaming_hourly_replay",
-    "streaming_sessionize_replay", "text_dedup_keepers",
-    "winnow_doc_fingerprints",
+    "orc_roundtrip", "compaction_roundtrip", "wav_pcm_features",
+    "aac_decode_meta", "top_tokens", "corpus_filter_pipeline",
+    "token_rarity_scores", "deterministic_sample_10pct",
+    "global_shuffle_shards", "q17_small_quantity_revenue",
+    "q16_supplier_part_counts", "bpe_token_stats",
 )
 
 

@@ -11,8 +11,14 @@ import zipfile
 import pytest
 from pyspark.sql import functions as F
 
+from appengine_mapreduce_spark.core.job import (
+    DataFrameInput,
+    MapReduceJob,
+    MapReduceSpecification,
+)
 from appengine_mapreduce_spark.sinks.bigquery_like import BigQueryStageOutput
 from appengine_mapreduce_spark.sinks.files import FileOutput, ShardedByKeyOutput
+from appengine_mapreduce_spark.sinks.inmemory import InMemoryOutput, NoOutput
 from appengine_mapreduce_spark.sinks.mutation import MutationPoolOutput
 from appengine_mapreduce_spark.sources.generators import (
     consecutive_longs,
@@ -153,15 +159,69 @@ def test_mutation_pool_batches(spark, tmp_path):
             for m in batch:
                 fh.write(f"{m.op}:{m.row[0]}\n")
 
+    evaluated = spark.sparkContext.accumulator(0)
+
+    def tally(batches):
+        for pdf in batches:
+            evaluated.add(len(pdf))
+            yield pdf
+
     df = spark.range(0, 205).select(F.col("id"), F.lit("x").alias("v"))
+    df = df.mapInPandas(tally, schema=df.schema)
     n = MutationPoolOutput(apply_batch).write(df)
     assert n == 205
+    assert evaluated.value == 205, "the sink must evaluate its input once"
     seen = []
     for f in glob.glob(f"{log_dir}/*.txt"):
         with open(f) as fh:
             seen.extend(fh.read().splitlines())
     assert len(seen) == 205
     assert all(s.startswith("put:") for s in seen)
+
+
+def _count_by_key(ctx, row):
+    yield (row.k, 1)
+
+
+def _sum_values(ctx, key, values):
+    yield (key, sum(values))
+
+
+def _discard_batch(batch):
+    pass
+
+
+@pytest.mark.parametrize(
+    "make_output",
+    [
+        lambda d: InMemoryOutput(),
+        lambda d: NoOutput(),
+        lambda d: FileOutput(str(d / "files")),
+        lambda d: FileOutput(str(d / "shards"), shards=2),
+        lambda d: BigQueryStageOutput(str(d / "bq")),
+        lambda d: MutationPoolOutput(_discard_batch),
+    ],
+    ids=["in_memory", "no_output", "file", "file_shards2", "bigquery_stage", "mutation_pool"],
+)
+def test_counters_match_across_sinks(spark, tmp_path, make_output):
+    """Every sink runs the map→reduce plan once: a 1000-row, 7-key count
+    reports one mapper call per record and one reducer call per key,
+    whichever sink consumes it."""
+    df = spark.range(0, 1000).select((F.col("id") % 7).alias("k"))
+    spec = (
+        MapReduceSpecification.builder()
+        .set_job_name("count_by_key")
+        .set_input(DataFrameInput(df))
+        .set_mapper(_count_by_key)
+        .set_map_output_schema("k bigint, n bigint")
+        .set_reducer(_sum_values)
+        .set_output_schema("k bigint, n bigint")
+        .set_output(make_output(tmp_path))
+        .build()
+    )
+    counters = MapReduceJob.run(spark, spec).counters
+    assert counters["mapper-calls"] == 1000
+    assert counters["reducer-calls"] == 7
 
 
 def test_bigquery_stage_output(spark, tmp_path):
