@@ -22,4 +22,14 @@ Spark-first re-expression of the reference's capabilities:
 - ``streaming`` — Structured Streaming upgrades (the reference is batch-only).
 """
 
+import sys
+
+from pyspark import cloudpickle
+
 __version__ = "0.1.0"
+
+# The driver contract puts this package on the driver's sys.path only;
+# executor Python workers have no install. Pickling the whole package by
+# value makes every worker closure self-contained. It follows that code
+# which runs on a worker must not import from the package at call time.
+cloudpickle.register_pickle_by_value(sys.modules[__name__])

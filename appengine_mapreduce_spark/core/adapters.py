@@ -6,7 +6,8 @@ ran interpreted Python per record over task-queue slices
 (handlers.py:534-648 _process_inputs/_process_datum). Here user generators
 run inside ``mapInPandas`` / ``applyInPandas`` — Arrow moves columns in
 batches, Python touches each row exactly once, and everything before/after
-the adapter stays JVM-side.
+the adapter stays JVM-side. ``map_rows`` is the same seam for plain
+per-row functions (media decoders, fixture encoders, file readers).
 
 Scale notes:
 - map-side combine buffers per partition with a bounded flush
@@ -21,7 +22,7 @@ Scale notes:
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterable, Iterator
 
 import pandas as pd
 from pyspark import TaskContext
@@ -31,19 +32,6 @@ from pyspark.sql.types import StructType
 from appengine_mapreduce_spark.core import counters as C
 from appengine_mapreduce_spark.core.counters import CounterContext
 from appengine_mapreduce_spark.core.worker import Combiner, Mapper, Reducer
-
-# Executor Python workers may not have this package on their path (the
-# driver contract only puts it on the DRIVER's sys.path). Serialize the
-# small core modules by value so worker closures are self-contained.
-try:
-    from pyspark import cloudpickle as _cloudpickle
-    import appengine_mapreduce_spark.core.adapters as _self_mod  # noqa: PLW0406
-    from appengine_mapreduce_spark.core import worker as _worker_mod
-
-    for _m in (C, _worker_mod, _self_mod):
-        _cloudpickle.register_pickle_by_value(_m)
-except Exception:  # pragma: no cover — older pyspark without the API
-    pass
 
 _EMIT_BATCH_ROWS = 10_000
 _COMBINE_FLUSH_KEYS = 100_000
@@ -71,6 +59,38 @@ def _to_pdf(rows: list[tuple], schema: StructType) -> pd.DataFrame:
     if not rows:
         return _empty_pdf(schema)
     return pd.DataFrame(rows, columns=[f.name for f in schema.fields])
+
+
+def _ddl(schema: str | StructType) -> StructType:
+    if isinstance(schema, StructType):
+        return schema
+    return StructType.fromDDL(schema)
+
+
+def map_rows(
+    df: DataFrame,
+    fn: Callable[..., Iterable[tuple]],
+    schema: str | StructType,
+) -> DataFrame:
+    """Per-row Python over ``df``: ``fn(*row)`` is called once per input
+    row, with the columns in ``df``'s order, and yields output tuples in
+    ``schema`` order (zero, one or many per row). Output is emitted in
+    frames of up to ``_EMIT_BATCH_ROWS`` rows; a partition with no output
+    emits no frame at all."""
+    out_schema = _ddl(schema)
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        buf: list[tuple] = []
+        for pdf in batches:
+            for row in pdf.itertuples(index=False, name=None):
+                buf.extend(fn(*row))
+                if len(buf) >= _EMIT_BATCH_ROWS:
+                    yield _to_pdf(buf, out_schema)
+                    buf = []
+        if buf:
+            yield _to_pdf(buf, out_schema)
+
+    return df.mapInPandas(run, schema=out_schema)
 
 
 def run_mapper(

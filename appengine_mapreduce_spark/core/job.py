@@ -35,7 +35,7 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
-from appengine_mapreduce_spark.core.adapters import run_mapper, run_reducer
+from appengine_mapreduce_spark.core.adapters import _ddl, run_mapper, run_reducer
 from appengine_mapreduce_spark.core.counters import Counters
 from appengine_mapreduce_spark.core.partitioning import ensure_parallelism
 from appengine_mapreduce_spark.core.worker import (
@@ -46,12 +46,6 @@ from appengine_mapreduce_spark.core.worker import (
     as_mapper,
     as_reducer,
 )
-
-
-def _ddl(schema: str | StructType) -> StructType:
-    if isinstance(schema, StructType):
-        return schema
-    return StructType.fromDDL(schema)
 
 
 @dataclass

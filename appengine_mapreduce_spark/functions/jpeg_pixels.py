@@ -46,6 +46,7 @@ from appengine_mapreduce_spark.functions.jpeg import (
     JPEG_SOI,
     JpegFormatError,
     _segment,
+    decode_jpeg_meta,
 )
 
 # zigzag scan order (T.81 §A.3.6): index i of the scan -> (row, col)
@@ -1594,8 +1595,6 @@ def decode_progressive_color(
 def decode_gray_auto(blob: bytes) -> tuple[int, int, list[int]]:
     """Dispatch a grayscale JPEG to the baseline or progressive decoder by
     its SOF marker — one entry point for the pixel operator."""
-    from appengine_mapreduce_spark.functions.jpeg import decode_jpeg_meta
-
     if decode_jpeg_meta(blob).progressive:
         return decode_progressive_gray(blob)
     return decode_baseline_gray(blob)
@@ -1604,8 +1603,6 @@ def decode_gray_auto(blob: bytes) -> tuple[int, int, list[int]]:
 def decode_color_auto(blob: bytes) -> tuple[int, int, list[tuple[int, int, int]]]:
     """Dispatch a 3-component JPEG to the baseline or progressive color
     decoder by its SOF marker."""
-    from appengine_mapreduce_spark.functions.jpeg import decode_jpeg_meta
-
     if decode_jpeg_meta(blob).progressive:
         return decode_progressive_color(blob)
     return decode_baseline_color(blob)

@@ -8,7 +8,8 @@ UDF signatures — is real and tested; the actual codec calls are STUBBED
 this container. Swapping a real decoder in changes exactly one function
 per operator, marked ``# STUB``.
 
-Scale notes: decode/feature steps run via ``mapInPandas`` so one Arrow
+Scale notes: decode/feature steps are per-row functions run through
+``core/adapters.map_rows`` (one ``mapInPandas`` stage), so one Arrow
 batch of binary blobs crosses into Python at a time;
 ``spark.sql.execution.arrow.maxRecordsPerBatch`` bounds batch memory (a
 4K-frame batch at default 10k records would OOM — callers set it per
@@ -20,16 +21,35 @@ from __future__ import annotations
 
 import hashlib
 import struct as _struct
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
+from appengine_mapreduce_spark.core.adapters import map_rows
 from appengine_mapreduce_spark.core.partitioning import ensure_parallelism
-from appengine_mapreduce_spark.core.pickling import register_self
-
-register_self(__name__)
-
+from appengine_mapreduce_spark.functions.flac import decode_flac
+from appengine_mapreduce_spark.functions.jpeg import JPEG_SOI, decode_jpeg_meta
+from appengine_mapreduce_spark.functions.jpeg_pixels import (
+    decode_color_auto,
+    decode_gray_auto,
+)
+from appengine_mapreduce_spark.functions.media import (
+    decode_aac_adts_meta,
+    decode_avi_mrle_frames,
+    decode_avi_pcm_audio,
+    decode_avi_video_frames,
+    decode_bmp_pixels,
+    decode_gif_frames,
+    decode_gif_meta,
+    decode_mp3_meta,
+    decode_mp4_meta,
+    decode_mp4_track_samples,
+    decode_tiff_meta,
+    decode_tiff_strips,
+    decode_wav_meta,
+    decode_wav_samples,
+    decode_webp_meta,
+)
+from appengine_mapreduce_spark.functions.png import PNG_SIGNATURE, decode_png
 
 DECODERS_AVAILABLE = False  # flip when librosa/pyav exist in the image —
 # now covers ONLY perceptual-audio SAMPLE decode (the MP3 polyphase
@@ -98,9 +118,6 @@ def _stub_decode_image(blob: bytes) -> tuple[int, int, bytes]:
     decode_jpeg_color_pixel_stats). Other formats fall back to a
     deterministic fake (# STUB) until their codecs exist.
     """
-    from appengine_mapreduce_spark.functions.jpeg import JPEG_SOI, decode_jpeg_meta
-    from appengine_mapreduce_spark.functions.png import PNG_SIGNATURE, decode_png
-
     if blob[:8] == PNG_SIGNATURE:
         img = decode_png(blob)
         return img.width, img.height, hashlib.md5(img.pixels).digest()
@@ -144,22 +161,11 @@ def decode_image_features(
     out_schema = f"{id_col} bigint, width int, height int, features array<float>"
     df = ensure_parallelism(df.select(id_col, content_col))
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, widths, heights, feats = [], [], [], []
-            for i, blob in zip(pdf[id_col], pdf[content_col]):
-                w, h, digest = _stub_decode_image(bytes(blob))
-                ids.append(int(i))
-                widths.append(w)
-                heights.append(h)
-                feats.append(
-                    [x / 255.0 for x in _struct.unpack("8B", digest[:8])]
-                )
-            yield pd.DataFrame(
-                {id_col: ids, "width": widths, "height": heights, "features": feats}
-            )
+    def decode(i, blob):
+        w, h, digest = _stub_decode_image(bytes(blob))
+        yield int(i), w, h, [x / 255.0 for x in _struct.unpack("8B", digest[:8])]
 
-    return df.mapInPandas(decode, schema=out_schema)
+    return map_rows(df, decode, out_schema)
 
 
 def decode_png_images(
@@ -170,53 +176,20 @@ def decode_png_images(
     mapInPandas. Output per image: dimensions, format fields, and
     pixel_sum/n_pixels over the decoded bytes (decode-sensitive stats a
     header peek cannot fake)."""
-    from appengine_mapreduce_spark.functions.png import decode_png
-
     out_schema = (
         f"{id_col} bigint, width int, height int, bit_depth int, "
         "color_type int, pixel_sum bigint, n_pixels bigint"
     )
     df = ensure_parallelism(df.select(id_col, content_col))
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, blob in zip(pdf[id_col], pdf[content_col]):
-                img = decode_png(bytes(blob))
-                rows.append(
-                    (
-                        int(i),
-                        img.width,
-                        img.height,
-                        img.bit_depth,
-                        img.color_type,
-                        sum(img.pixels),
-                        len(img.pixels) // img.channels,
-                    )
-                )
-            yield (
-                pd.DataFrame(
-                    rows,
-                    columns=[
-                        id_col, "width", "height", "bit_depth",
-                        "color_type", "pixel_sum", "n_pixels",
-                    ],
-                )
-                if rows
-                else pd.DataFrame(
-                    {
-                        id_col: pd.Series(dtype="int64"),
-                        "width": pd.Series(dtype="int32"),
-                        "height": pd.Series(dtype="int32"),
-                        "bit_depth": pd.Series(dtype="int32"),
-                        "color_type": pd.Series(dtype="int32"),
-                        "pixel_sum": pd.Series(dtype="int64"),
-                        "n_pixels": pd.Series(dtype="int64"),
-                    }
-                )
-            )
+    def decode(i, blob):
+        img = decode_png(bytes(blob))
+        yield (
+            int(i), img.width, img.height, img.bit_depth, img.color_type,
+            sum(img.pixels), len(img.pixels) // img.channels,
+        )
 
-    return df.mapInPandas(decode, schema=out_schema)
+    return map_rows(df, decode, out_schema)
 
 
 def decode_jpeg_headers(
@@ -227,45 +200,18 @@ def decode_jpeg_headers(
     via mapInPandas. Output per image: dimensions, sample precision,
     component count, and baseline/progressive mode — the fields a corpus
     dimension-filter reads without entropy-decoding pixels."""
-    from appengine_mapreduce_spark.functions.jpeg import decode_jpeg_meta
-
     out_schema = (
         f"{id_col} bigint, width int, height int, precision int, "
         "n_components int, progressive boolean"
     )
     df = ensure_parallelism(df.select(id_col, content_col))
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, blob in zip(pdf[id_col], pdf[content_col]):
-                m = decode_jpeg_meta(bytes(blob))
-                rows.append(
-                    (int(i), m.width, m.height, m.precision,
-                     m.n_components, m.progressive)
-                )
-            yield (
-                pd.DataFrame(
-                    rows,
-                    columns=[
-                        id_col, "width", "height", "precision",
-                        "n_components", "progressive",
-                    ],
-                )
-                if rows
-                else pd.DataFrame(
-                    {
-                        id_col: pd.Series(dtype="int64"),
-                        "width": pd.Series(dtype="int32"),
-                        "height": pd.Series(dtype="int32"),
-                        "precision": pd.Series(dtype="int32"),
-                        "n_components": pd.Series(dtype="int32"),
-                        "progressive": pd.Series(dtype="bool"),
-                    }
-                )
-            )
+    def decode(i, blob):
+        m = decode_jpeg_meta(bytes(blob))
+        yield (int(i), m.width, m.height, m.precision, m.n_components,
+               m.progressive)
 
-    return df.mapInPandas(decode, schema=out_schema)
+    return map_rows(df, decode, out_schema)
 
 
 def decode_audio_meta(
@@ -276,37 +222,18 @@ def decode_audio_meta(
     depth, frame count, duration — the routing fields for an audio corpus
     (resample? mono-ize? drop sub-second clips?) read without touching
     samples."""
-    from appengine_mapreduce_spark.functions.media import decode_wav_meta
-
     out_schema = (
         f"{id_col} bigint, n_channels int, sample_rate int, "
         "bits_per_sample int, n_frames bigint, duration_ms bigint"
     )
     df = ensure_parallelism(df.select(id_col, content_col))
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, blob in zip(pdf[id_col], pdf[content_col]):
-                m = decode_wav_meta(bytes(blob))
-                rows.append((int(i), m.n_channels, m.sample_rate,
-                             m.bits_per_sample, m.n_frames, m.duration_ms))
-            yield (
-                pd.DataFrame(rows, columns=[
-                    id_col, "n_channels", "sample_rate", "bits_per_sample",
-                    "n_frames", "duration_ms"])
-                if rows
-                else pd.DataFrame({
-                    id_col: pd.Series(dtype="int64"),
-                    "n_channels": pd.Series(dtype="int32"),
-                    "sample_rate": pd.Series(dtype="int32"),
-                    "bits_per_sample": pd.Series(dtype="int32"),
-                    "n_frames": pd.Series(dtype="int64"),
-                    "duration_ms": pd.Series(dtype="int64"),
-                })
-            )
+    def decode(i, blob):
+        m = decode_wav_meta(bytes(blob))
+        yield (int(i), m.n_channels, m.sample_rate, m.bits_per_sample,
+               m.n_frames, m.duration_ms)
 
-    return df.mapInPandas(decode, schema=out_schema)
+    return map_rows(df, decode, out_schema)
 
 
 def decode_video_meta(
@@ -316,36 +243,17 @@ def decode_video_meta(
     (functions/media.py box walk to moov/mvhd), Arrow-batched. Output:
     brand, timescale, duration, track count — what frame-sampling and
     length-filter passes read before any codec work."""
-    from appengine_mapreduce_spark.functions.media import decode_mp4_meta
-
     out_schema = (
         f"{id_col} bigint, major_brand string, timescale bigint, "
         "duration_ms bigint, n_tracks int"
     )
     df = ensure_parallelism(df.select(id_col, content_col))
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, blob in zip(pdf[id_col], pdf[content_col]):
-                m = decode_mp4_meta(bytes(blob))
-                rows.append((int(i), m.major_brand, m.timescale,
-                             m.duration_ms, m.n_tracks))
-            yield (
-                pd.DataFrame(rows, columns=[
-                    id_col, "major_brand", "timescale", "duration_ms",
-                    "n_tracks"])
-                if rows
-                else pd.DataFrame({
-                    id_col: pd.Series(dtype="int64"),
-                    "major_brand": pd.Series(dtype="object"),
-                    "timescale": pd.Series(dtype="int64"),
-                    "duration_ms": pd.Series(dtype="int64"),
-                    "n_tracks": pd.Series(dtype="int32"),
-                })
-            )
+    def decode(i, blob):
+        m = decode_mp4_meta(bytes(blob))
+        yield int(i), m.major_brand, m.timescale, m.duration_ms, m.n_tracks
 
-    return df.mapInPandas(decode, schema=out_schema)
+    return map_rows(df, decode, out_schema)
 
 
 def resize_images(
@@ -361,18 +269,12 @@ def resize_images(
     out_schema = f"{id_col} bigint, width int, height int, {content_col} binary"
     df = ensure_parallelism(df.select(id_col, content_col))
 
-    def resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, blob in zip(pdf[id_col], pdf[content_col]):
-                digest = hashlib.md5(bytes(blob)).digest()
-                fake = digest + bytes([target_w % 256, target_h % 256])
-                rows.append((int(i), target_w, target_h, fake))
-            yield pd.DataFrame(
-                rows, columns=[id_col, "width", "height", content_col]
-            )
+    def resize(i, blob):
+        digest = hashlib.md5(bytes(blob)).digest()
+        fake = digest + bytes([target_w % 256, target_h % 256])
+        yield int(i), target_w, target_h, fake
 
-    return df.mapInPandas(resize, schema=out_schema)
+    return map_rows(df, resize, out_schema)
 
 
 def sample_video_frames(
@@ -388,28 +290,12 @@ def sample_video_frames(
     out_schema = f"{id_col} bigint, frame_ts_ms bigint, frame binary"
     df = ensure_parallelism(df.select(id_col, content_col, duration_col))
 
-    def sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, blob, dur in zip(
-                pdf[id_col], pdf[content_col], pdf[duration_col]
-            ):
-                for ts in range(0, int(dur), every_ms):
-                    frame = hashlib.md5(bytes(blob) + ts.to_bytes(8, "big")).digest()
-                    rows.append((int(i), ts, frame))
-            yield (
-                pd.DataFrame(rows, columns=[id_col, "frame_ts_ms", "frame"])
-                if rows
-                else pd.DataFrame(
-                    {
-                        id_col: pd.Series(dtype="int64"),
-                        "frame_ts_ms": pd.Series(dtype="int64"),
-                        "frame": pd.Series(dtype="object"),
-                    }
-                )
-            )
+    def sample(i, blob, dur):
+        for ts in range(0, int(dur), every_ms):
+            frame = hashlib.md5(bytes(blob) + ts.to_bytes(8, "big")).digest()
+            yield int(i), ts, frame
 
-    return df.mapInPandas(sample, schema=out_schema)
+    return map_rows(df, sample, out_schema)
 
 
 def _pcm_feature_row(samples: list) -> tuple:
@@ -434,34 +320,17 @@ def audio_pcm_features(
     screens); integer arithmetic keeps them engine-portable for the
     oracle. Compressed formats (MP3/AAC) remain behind DECODERS_AVAILABLE
     — PCM does not."""
-    from appengine_mapreduce_spark.functions.media import decode_wav_samples
-
     out_schema = (
         f"{id_col} bigint, n_samples bigint, sum_sq bigint, "
         "peak int, zero_crossings bigint"
     )
     df = ensure_parallelism(df.select(id_col, content_col))
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, blob in zip(pdf[id_col], pdf[content_col]):
-                _meta, samples = decode_wav_samples(bytes(blob))
-                rows.append((int(i), *_pcm_feature_row(samples)))
-            yield (
-                pd.DataFrame(rows, columns=[
-                    id_col, "n_samples", "sum_sq", "peak", "zero_crossings"])
-                if rows
-                else pd.DataFrame({
-                    id_col: pd.Series(dtype="int64"),
-                    "n_samples": pd.Series(dtype="int64"),
-                    "sum_sq": pd.Series(dtype="int64"),
-                    "peak": pd.Series(dtype="int32"),
-                    "zero_crossings": pd.Series(dtype="int64"),
-                })
-            )
+    def decode(i, blob):
+        _meta, samples = decode_wav_samples(bytes(blob))
+        yield int(i), *_pcm_feature_row(samples)
 
-    return df.mapInPandas(decode, schema=out_schema)
+    return map_rows(df, decode, out_schema)
 
 
 def audio_pcm_features_per_channel(
@@ -473,40 +342,18 @@ def audio_pcm_features_per_channel(
     corpus screen needs (a silent or clipped channel hides inside
     whole-clip stats). Same Arrow-batched mapInPandas seam; rows fan out
     n_channels x, still clip-bounded."""
-    from appengine_mapreduce_spark.functions.media import decode_wav_samples
-
     out_schema = (
         f"{id_col} bigint, channel int, n_samples bigint, sum_sq bigint, "
         "peak int, zero_crossings bigint"
     )
     df = ensure_parallelism(df.select(id_col, content_col))
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [id_col, "channel", "n_samples", "sum_sq", "peak",
-                "zero_crossings"]
-        for pdf in batches:
-            rows = []
-            for i, blob in zip(pdf[id_col], pdf[content_col]):
-                meta, samples = decode_wav_samples(bytes(blob))
-                for ch in range(meta.n_channels):
-                    rows.append((
-                        int(i), ch,
-                        *_pcm_feature_row(samples[ch::meta.n_channels]),
-                    ))
-            yield (
-                pd.DataFrame(rows, columns=cols)
-                if rows
-                else pd.DataFrame({
-                    id_col: pd.Series(dtype="int64"),
-                    "channel": pd.Series(dtype="int32"),
-                    "n_samples": pd.Series(dtype="int64"),
-                    "sum_sq": pd.Series(dtype="int64"),
-                    "peak": pd.Series(dtype="int32"),
-                    "zero_crossings": pd.Series(dtype="int64"),
-                })
-            )
+    def decode(i, blob):
+        meta, samples = decode_wav_samples(bytes(blob))
+        for ch in range(meta.n_channels):
+            yield int(i), ch, *_pcm_feature_row(samples[ch::meta.n_channels])
 
-    return df.mapInPandas(decode, schema=out_schema)
+    return map_rows(df, decode, out_schema)
 
 
 def decode_jpeg_pixel_stats(
@@ -518,37 +365,17 @@ def decode_jpeg_pixel_stats(
     (sum/min/max — integer-exact, the shape an image-corpus filter uses
     for exposure/blank-page screens). Handles baseline and progressive
     grayscale; color streams go through decode_jpeg_color_pixel_stats."""
-    from appengine_mapreduce_spark.functions.jpeg_pixels import (
-        decode_gray_auto,
-    )
-
     out_schema = (
         f"{id_col} bigint, width int, height int, px_sum bigint, "
         "px_min int, px_max int"
     )
     df = ensure_parallelism(df.select(id_col, content_col))
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, blob in zip(pdf[id_col], pdf[content_col]):
-                w, h, px = decode_gray_auto(bytes(blob))
-                rows.append((int(i), w, h, sum(px), min(px), max(px)))
-            yield (
-                pd.DataFrame(rows, columns=[
-                    id_col, "width", "height", "px_sum", "px_min", "px_max"])
-                if rows
-                else pd.DataFrame({
-                    id_col: pd.Series(dtype="int64"),
-                    "width": pd.Series(dtype="int32"),
-                    "height": pd.Series(dtype="int32"),
-                    "px_sum": pd.Series(dtype="int64"),
-                    "px_min": pd.Series(dtype="int32"),
-                    "px_max": pd.Series(dtype="int32"),
-                })
-            )
+    def decode(i, blob):
+        w, h, px = decode_gray_auto(bytes(blob))
+        yield int(i), w, h, sum(px), min(px), max(px)
 
-    return df.mapInPandas(decode, schema=out_schema)
+    return map_rows(df, decode, out_schema)
 
 
 def decode_mp3_frame_meta(
@@ -561,8 +388,6 @@ def decode_mp3_frame_meta(
     The compressed-SAMPLE decode (filterbank/MDCT) stays behind
     DECODERS_AVAILABLE; the frame walk is the routing layer an audio
     corpus filters on."""
-    from appengine_mapreduce_spark.functions.media import decode_mp3_meta
-
     out_schema = (
         f"{id_col} bigint, mpeg_version string, sample_rate int, "
         "n_frames bigint, duration_ms bigint, bitrate_kbps int, "
@@ -570,33 +395,12 @@ def decode_mp3_frame_meta(
     )
     df = ensure_parallelism(df.select(id_col, content_col))
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, blob in zip(pdf[id_col], pdf[content_col]):
-                m = decode_mp3_meta(bytes(blob))
-                rows.append(
-                    (int(i), m.mpeg_version, m.sample_rate, m.n_frames,
-                     m.duration_ms, m.bitrate_kbps, m.is_cbr, m.channel_mode)
-                )
-            yield (
-                pd.DataFrame(rows, columns=[
-                    id_col, "mpeg_version", "sample_rate", "n_frames",
-                    "duration_ms", "bitrate_kbps", "is_cbr", "channel_mode"])
-                if rows
-                else pd.DataFrame({
-                    id_col: pd.Series(dtype="int64"),
-                    "mpeg_version": pd.Series(dtype="object"),
-                    "sample_rate": pd.Series(dtype="int32"),
-                    "n_frames": pd.Series(dtype="int64"),
-                    "duration_ms": pd.Series(dtype="int64"),
-                    "bitrate_kbps": pd.Series(dtype="int32"),
-                    "is_cbr": pd.Series(dtype="bool"),
-                    "channel_mode": pd.Series(dtype="object"),
-                })
-            )
+    def decode(i, blob):
+        m = decode_mp3_meta(bytes(blob))
+        yield (int(i), m.mpeg_version, m.sample_rate, m.n_frames,
+               m.duration_ms, m.bitrate_kbps, m.is_cbr, m.channel_mode)
 
-    return df.mapInPandas(decode, schema=out_schema)
+    return map_rows(df, decode, out_schema)
 
 
 def avi_audio_pcm_features(
@@ -608,38 +412,17 @@ def avi_audio_pcm_features(
     compute the same integer-exact clip features as the WAV path
     (_pcm_feature_row). A video corpus screens soundtracks
     (silence/clipping) without any DSP library."""
-    from appengine_mapreduce_spark.functions.media import decode_avi_pcm_audio
-
     out_schema = (
         f"{id_col} bigint, sample_rate int, n_samples bigint, "
         "sum_sq bigint, peak int, zero_crossings bigint"
     )
     df = ensure_parallelism(df.select(id_col, content_col))
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, blob in zip(pdf[id_col], pdf[content_col]):
-                meta, samples = decode_avi_pcm_audio(bytes(blob))
-                rows.append(
-                    (int(i), meta.sample_rate, *_pcm_feature_row(samples))
-                )
-            yield (
-                pd.DataFrame(rows, columns=[
-                    id_col, "sample_rate", "n_samples", "sum_sq",
-                    "peak", "zero_crossings"])
-                if rows
-                else pd.DataFrame({
-                    id_col: pd.Series(dtype="int64"),
-                    "sample_rate": pd.Series(dtype="int32"),
-                    "n_samples": pd.Series(dtype="int64"),
-                    "sum_sq": pd.Series(dtype="int64"),
-                    "peak": pd.Series(dtype="int32"),
-                    "zero_crossings": pd.Series(dtype="int64"),
-                })
-            )
+    def decode(i, blob):
+        meta, samples = decode_avi_pcm_audio(bytes(blob))
+        yield int(i), meta.sample_rate, *_pcm_feature_row(samples)
 
-    return df.mapInPandas(decode, schema=out_schema)
+    return map_rows(df, decode, out_schema)
 
 
 def decode_tiff_pages(
@@ -650,40 +433,18 @@ def decode_tiff_pages(
     first-page geometry/compression — the routing metadata for scanned-
     document corpora (multi-page TIFF is the document-scan interchange
     format; per-page pixel decode depends on the embedded compression)."""
-    from appengine_mapreduce_spark.functions.media import decode_tiff_meta
-
     out_schema = (
         f"{id_col} bigint, byte_order string, n_pages bigint, width int, "
         "height int, bits_per_sample int, compression int"
     )
     df = ensure_parallelism(df.select(id_col, content_col))
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, blob in zip(pdf[id_col], pdf[content_col]):
-                m = decode_tiff_meta(bytes(blob))
-                rows.append(
-                    (int(i), m.byte_order, m.n_pages, m.width, m.height,
-                     m.bits_per_sample, m.compression)
-                )
-            yield (
-                pd.DataFrame(rows, columns=[
-                    id_col, "byte_order", "n_pages", "width", "height",
-                    "bits_per_sample", "compression"])
-                if rows
-                else pd.DataFrame({
-                    id_col: pd.Series(dtype="int64"),
-                    "byte_order": pd.Series(dtype="object"),
-                    "n_pages": pd.Series(dtype="int64"),
-                    "width": pd.Series(dtype="int32"),
-                    "height": pd.Series(dtype="int32"),
-                    "bits_per_sample": pd.Series(dtype="int32"),
-                    "compression": pd.Series(dtype="int32"),
-                })
-            )
+    def decode(i, blob):
+        m = decode_tiff_meta(bytes(blob))
+        yield (int(i), m.byte_order, m.n_pages, m.width, m.height,
+               m.bits_per_sample, m.compression)
 
-    return df.mapInPandas(decode, schema=out_schema)
+    return map_rows(df, decode, out_schema)
 
 
 def decode_web_image_meta(
@@ -694,51 +455,24 @@ def decode_web_image_meta(
     from the public VP8/VP8L/VP8X header layouts, GIF frame counts from
     the block-structure walk. With JPEG/PNG this covers the whole web
     image-format triad's routing metadata, zero dependencies."""
-    from appengine_mapreduce_spark.functions.media import (
-        decode_gif_meta,
-        decode_webp_meta,
-    )
-
     out_schema = (
         f"{id_col} bigint, kind string, width int, height int, "
         "n_frames bigint, has_alpha boolean, has_animation boolean"
     )
     df = ensure_parallelism(df.select(id_col, content_col))
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, blob in zip(pdf[id_col], pdf[content_col]):
-                blob = bytes(blob)
-                if blob[:4] == b"GIF8":
-                    g = decode_gif_meta(blob)
-                    rows.append(
-                        (int(i), "gif", g.width, g.height, g.n_frames,
-                         False, g.n_frames > 1)
-                    )
-                else:
-                    m = decode_webp_meta(blob)
-                    rows.append(
-                        (int(i), "webp-" + m.format, m.width, m.height, 0,
-                         m.has_alpha, m.has_animation)
-                    )
-            yield (
-                pd.DataFrame(rows, columns=[
-                    id_col, "kind", "width", "height", "n_frames",
-                    "has_alpha", "has_animation"])
-                if rows
-                else pd.DataFrame({
-                    id_col: pd.Series(dtype="int64"),
-                    "kind": pd.Series(dtype="object"),
-                    "width": pd.Series(dtype="int32"),
-                    "height": pd.Series(dtype="int32"),
-                    "n_frames": pd.Series(dtype="int64"),
-                    "has_alpha": pd.Series(dtype="bool"),
-                    "has_animation": pd.Series(dtype="bool"),
-                })
-            )
+    def decode(i, blob):
+        blob = bytes(blob)
+        if blob[:4] == b"GIF8":
+            g = decode_gif_meta(blob)
+            yield (int(i), "gif", g.width, g.height, g.n_frames, False,
+                   g.n_frames > 1)
+        else:
+            m = decode_webp_meta(blob)
+            yield (int(i), "webp-" + m.format, m.width, m.height, 0,
+                   m.has_alpha, m.has_animation)
 
-    return df.mapInPandas(decode, schema=out_schema)
+    return map_rows(df, decode, out_schema)
 
 
 def decode_video_frame_pixels(
@@ -751,60 +485,31 @@ def decode_video_frame_pixels(
     bottom-up padded BGR layout — the two capture/intermediate formats
     that need no codec library. Inter-frame codecs (H.264/VP9) remain
     behind DECODERS_AVAILABLE."""
-    from appengine_mapreduce_spark.functions.jpeg import decode_jpeg_meta
-    from appengine_mapreduce_spark.functions.jpeg_pixels import (
-        decode_color_auto,
-        decode_gray_auto,
-    )
-    from appengine_mapreduce_spark.functions.media import (
-        decode_avi_video_frames,
-    )
-
     out_schema = (
         f"{id_col} bigint, n_frames bigint, width int, height int, "
         "px_sum bigint, px_min int, px_max int"
     )
     df = ensure_parallelism(df.select(id_col, content_col))
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, blob in zip(pdf[id_col], pdf[content_col]):
-                meta, codec, frames = decode_avi_video_frames(bytes(blob))
-                total = 0
-                mn, mx = 255, 0
-                for fr in frames:
-                    if codec == "DIB":
-                        px = [v for p in fr for v in p]
-                    elif decode_jpeg_meta(fr).n_components == 3:
-                        _w, _h, rgb = decode_color_auto(fr)
-                        px = [v for p in rgb for v in p]
-                    else:
-                        _w, _h, px = decode_gray_auto(fr)
-                    total += sum(px)
-                    mn = min(mn, min(px))
-                    mx = max(mx, max(px))
-                rows.append(
-                    (int(i), meta.n_frames, meta.width, meta.height,
-                     total, mn if frames else 0, mx if frames else 0)
-                )
-            yield (
-                pd.DataFrame(rows, columns=[
-                    id_col, "n_frames", "width", "height",
-                    "px_sum", "px_min", "px_max"])
-                if rows
-                else pd.DataFrame({
-                    id_col: pd.Series(dtype="int64"),
-                    "n_frames": pd.Series(dtype="int64"),
-                    "width": pd.Series(dtype="int32"),
-                    "height": pd.Series(dtype="int32"),
-                    "px_sum": pd.Series(dtype="int64"),
-                    "px_min": pd.Series(dtype="int32"),
-                    "px_max": pd.Series(dtype="int32"),
-                })
-            )
+    def decode(i, blob):
+        meta, codec, frames = decode_avi_video_frames(bytes(blob))
+        total = 0
+        mn, mx = 255, 0
+        for fr in frames:
+            if codec == "DIB":
+                px = [v for p in fr for v in p]
+            elif decode_jpeg_meta(fr).n_components == 3:
+                _w, _h, rgb = decode_color_auto(fr)
+                px = [v for p in rgb for v in p]
+            else:
+                _w, _h, px = decode_gray_auto(fr)
+            total += sum(px)
+            mn = min(mn, min(px))
+            mx = max(mx, max(px))
+        yield (int(i), meta.n_frames, meta.width, meta.height, total,
+               mn if frames else 0, mx if frames else 0)
 
-    return df.mapInPandas(decode, schema=out_schema)
+    return map_rows(df, decode, out_schema)
 
 
 def decode_aac_frame_meta(
@@ -816,8 +521,6 @@ def decode_aac_frame_meta(
     length — for frame count, exact duration (1024 samples/frame) and
     payload bytes. Like MP3, the header walk is the routing layer; AAC
     SAMPLE decode stays behind DECODERS_AVAILABLE."""
-    from appengine_mapreduce_spark.functions.media import decode_aac_adts_meta
-
     out_schema = (
         f"{id_col} bigint, profile string, sample_rate int, "
         "n_channels int, n_frames bigint, duration_ms bigint, "
@@ -825,32 +528,12 @@ def decode_aac_frame_meta(
     )
     df = ensure_parallelism(df.select(id_col, content_col))
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, blob in zip(pdf[id_col], pdf[content_col]):
-                m = decode_aac_adts_meta(bytes(blob))
-                rows.append(
-                    (int(i), m.profile, m.sample_rate, m.n_channels,
-                     m.n_frames, m.duration_ms, m.total_bytes)
-                )
-            yield (
-                pd.DataFrame(rows, columns=[
-                    id_col, "profile", "sample_rate", "n_channels",
-                    "n_frames", "duration_ms", "total_bytes"])
-                if rows
-                else pd.DataFrame({
-                    id_col: pd.Series(dtype="int64"),
-                    "profile": pd.Series(dtype="object"),
-                    "sample_rate": pd.Series(dtype="int32"),
-                    "n_channels": pd.Series(dtype="int32"),
-                    "n_frames": pd.Series(dtype="int64"),
-                    "duration_ms": pd.Series(dtype="int64"),
-                    "total_bytes": pd.Series(dtype="int64"),
-                })
-            )
+    def decode(i, blob):
+        m = decode_aac_adts_meta(bytes(blob))
+        yield (int(i), m.profile, m.sample_rate, m.n_channels, m.n_frames,
+               m.duration_ms, m.total_bytes)
 
-    return df.mapInPandas(decode, schema=out_schema)
+    return map_rows(df, decode, out_schema)
 
 
 def decode_jpeg_color_pixel_stats(
@@ -864,38 +547,18 @@ def decode_jpeg_color_pixel_stats(
     profile matrix (baseline/progressive × gray/color) is decoded for
     real; only lossy audio and video pixels remain behind
     DECODERS_AVAILABLE."""
-    from appengine_mapreduce_spark.functions.jpeg_pixels import (
-        decode_color_auto,
-    )
-
     out_schema = (
         f"{id_col} bigint, width int, height int, px_sum bigint, "
         "px_min int, px_max int"
     )
     df = ensure_parallelism(df.select(id_col, content_col))
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, blob in zip(pdf[id_col], pdf[content_col]):
-                w, h, rgb = decode_color_auto(bytes(blob))
-                flat = [v for px in rgb for v in px]
-                rows.append((int(i), w, h, sum(flat), min(flat), max(flat)))
-            yield (
-                pd.DataFrame(rows, columns=[
-                    id_col, "width", "height", "px_sum", "px_min", "px_max"])
-                if rows
-                else pd.DataFrame({
-                    id_col: pd.Series(dtype="int64"),
-                    "width": pd.Series(dtype="int32"),
-                    "height": pd.Series(dtype="int32"),
-                    "px_sum": pd.Series(dtype="int64"),
-                    "px_min": pd.Series(dtype="int32"),
-                    "px_max": pd.Series(dtype="int32"),
-                })
-            )
+    def decode(i, blob):
+        w, h, rgb = decode_color_auto(bytes(blob))
+        flat = [v for px in rgb for v in px]
+        yield int(i), w, h, sum(flat), min(flat), max(flat)
 
-    return df.mapInPandas(decode, schema=out_schema)
+    return map_rows(df, decode, out_schema)
 
 
 def mp4_frame_stats(
@@ -908,40 +571,18 @@ def mp4_frame_stats(
     information a video corpus filters on (drop sub-second clips, cap
     bitrate, budget decode cost) WITHOUT any codec; frame pixels stay
     behind DECODERS_AVAILABLE."""
-    from appengine_mapreduce_spark.functions.media import (
-        decode_mp4_track_samples,
-    )
-
     out_schema = (
         f"{id_col} bigint, n_samples bigint, total_bytes bigint, "
         "max_sample_bytes bigint, duration_units bigint"
     )
     df = ensure_parallelism(df.select(id_col, content_col))
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, blob in zip(pdf[id_col], pdf[content_col]):
-                ts = decode_mp4_track_samples(bytes(blob))
-                rows.append(
-                    (int(i), ts.n_samples, ts.total_bytes,
-                     ts.max_sample_bytes, ts.duration_units)
-                )
-            yield (
-                pd.DataFrame(rows, columns=[
-                    id_col, "n_samples", "total_bytes",
-                    "max_sample_bytes", "duration_units"])
-                if rows
-                else pd.DataFrame({
-                    id_col: pd.Series(dtype="int64"),
-                    "n_samples": pd.Series(dtype="int64"),
-                    "total_bytes": pd.Series(dtype="int64"),
-                    "max_sample_bytes": pd.Series(dtype="int64"),
-                    "duration_units": pd.Series(dtype="int64"),
-                })
-            )
+    def decode(i, blob):
+        ts = decode_mp4_track_samples(bytes(blob))
+        yield (int(i), ts.n_samples, ts.total_bytes, ts.max_sample_bytes,
+               ts.duration_units)
 
-    return df.mapInPandas(decode, schema=out_schema)
+    return map_rows(df, decode, out_schema)
 
 
 def decode_gif_pixel_stats(
@@ -955,52 +596,31 @@ def decode_gif_pixel_stats(
     first-frame geometry, and integer-exact RGB channel statistics over
     ALL frames. Frames decode standalone (no disposal compositing —
     documented scope; per-frame stats need none)."""
-    from appengine_mapreduce_spark.functions.media import decode_gif_frames
-
     out_schema = (
         f"{id_col} bigint, n_frames int, width int, height int, "
         "rgb_sum bigint, px_min int, px_max int"
     )
     df = ensure_parallelism(df.select(id_col, content_col))
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, blob in zip(pdf[id_col], pdf[content_col]):
-                _meta, frames = decode_gif_frames(bytes(blob))
-                rgb_sum = 0
-                px_min, px_max = 255, 0
-                for fr in frames:
-                    for idx in fr.pixels:
-                        r, g, b = fr.palette[idx]
-                        rgb_sum += r + g + b
-                        lo, hi = min(r, g, b), max(r, g, b)
-                        px_min = lo if lo < px_min else px_min
-                        px_max = hi if hi > px_max else px_max
-                f0 = frames[0] if frames else None
-                rows.append((
-                    int(i), len(frames),
-                    f0.width if f0 else 0, f0.height if f0 else 0,
-                    rgb_sum, px_min if frames else 0,
-                    px_max if frames else 0,
-                ))
-            yield (
-                pd.DataFrame(rows, columns=[
-                    id_col, "n_frames", "width", "height",
-                    "rgb_sum", "px_min", "px_max"])
-                if rows
-                else pd.DataFrame({
-                    id_col: pd.Series(dtype="int64"),
-                    "n_frames": pd.Series(dtype="int32"),
-                    "width": pd.Series(dtype="int32"),
-                    "height": pd.Series(dtype="int32"),
-                    "rgb_sum": pd.Series(dtype="int64"),
-                    "px_min": pd.Series(dtype="int32"),
-                    "px_max": pd.Series(dtype="int32"),
-                })
-            )
+    def decode(i, blob):
+        _meta, frames = decode_gif_frames(bytes(blob))
+        rgb_sum = 0
+        px_min, px_max = 255, 0
+        for fr in frames:
+            for idx in fr.pixels:
+                r, g, b = fr.palette[idx]
+                rgb_sum += r + g + b
+                lo, hi = min(r, g, b), max(r, g, b)
+                px_min = lo if lo < px_min else px_min
+                px_max = hi if hi > px_max else px_max
+        f0 = frames[0] if frames else None
+        yield (
+            int(i), len(frames),
+            f0.width if f0 else 0, f0.height if f0 else 0,
+            rgb_sum, px_min if frames else 0, px_max if frames else 0,
+        )
 
-    return df.mapInPandas(decode, schema=out_schema)
+    return map_rows(df, decode, out_schema)
 
 
 def decode_tiff_pixel_stats(
@@ -1011,42 +631,20 @@ def decode_tiff_pixel_stats(
     (functions/media.decode_tiff_strips, public TIFF 6.0 + Apple
     PackBits). The document-scan ingest shape: per-page geometry +
     integer-exact sample statistics for blank-page/exposure screens."""
-    from appengine_mapreduce_spark.functions.media import decode_tiff_strips
-
     out_schema = (
         f"{id_col} bigint, width int, height int, samples_per_pixel int, "
         "compression int, px_sum bigint, px_min int, px_max int"
     )
     df = ensure_parallelism(df.select(id_col, content_col))
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, blob in zip(pdf[id_col], pdf[content_col]):
-                tp = decode_tiff_strips(bytes(blob))
-                rows.append((
-                    int(i), tp.width, tp.height, tp.samples_per_pixel,
-                    tp.compression, sum(tp.pixels),
-                    min(tp.pixels), max(tp.pixels),
-                ))
-            yield (
-                pd.DataFrame(rows, columns=[
-                    id_col, "width", "height", "samples_per_pixel",
-                    "compression", "px_sum", "px_min", "px_max"])
-                if rows
-                else pd.DataFrame({
-                    id_col: pd.Series(dtype="int64"),
-                    "width": pd.Series(dtype="int32"),
-                    "height": pd.Series(dtype="int32"),
-                    "samples_per_pixel": pd.Series(dtype="int32"),
-                    "compression": pd.Series(dtype="int32"),
-                    "px_sum": pd.Series(dtype="int64"),
-                    "px_min": pd.Series(dtype="int32"),
-                    "px_max": pd.Series(dtype="int32"),
-                })
-            )
+    def decode(i, blob):
+        tp = decode_tiff_strips(bytes(blob))
+        yield (
+            int(i), tp.width, tp.height, tp.samples_per_pixel,
+            tp.compression, sum(tp.pixels), min(tp.pixels), max(tp.pixels),
+        )
 
-    return df.mapInPandas(decode, schema=out_schema)
+    return map_rows(df, decode, out_schema)
 
 
 def decode_bmp_pixel_stats(
@@ -1056,42 +654,21 @@ def decode_bmp_pixel_stats(
     layouts — 24-bit BGR and 8-bit palette, BI_RGB and BI_RLE8 runs
     (functions/media.decode_bmp_pixels, all algorithmic). Emits geometry
     + integer-exact RGB channel statistics."""
-    from appengine_mapreduce_spark.functions.media import decode_bmp_pixels
-
     out_schema = (
         f"{id_col} bigint, width int, height int, bits_per_pixel int, "
         "compression int, rgb_sum bigint, px_min int, px_max int"
     )
     df = ensure_parallelism(df.select(id_col, content_col))
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, blob in zip(pdf[id_col], pdf[content_col]):
-                bp = decode_bmp_pixels(bytes(blob))
-                flat = [v for p in bp.pixels for v in p]
-                rows.append((
-                    int(i), bp.width, bp.height, bp.bits_per_pixel,
-                    bp.compression, sum(flat), min(flat), max(flat),
-                ))
-            yield (
-                pd.DataFrame(rows, columns=[
-                    id_col, "width", "height", "bits_per_pixel",
-                    "compression", "rgb_sum", "px_min", "px_max"])
-                if rows
-                else pd.DataFrame({
-                    id_col: pd.Series(dtype="int64"),
-                    "width": pd.Series(dtype="int32"),
-                    "height": pd.Series(dtype="int32"),
-                    "bits_per_pixel": pd.Series(dtype="int32"),
-                    "compression": pd.Series(dtype="int32"),
-                    "rgb_sum": pd.Series(dtype="int64"),
-                    "px_min": pd.Series(dtype="int32"),
-                    "px_max": pd.Series(dtype="int32"),
-                })
-            )
+    def decode(i, blob):
+        bp = decode_bmp_pixels(bytes(blob))
+        flat = [v for p in bp.pixels for v in p]
+        yield (
+            int(i), bp.width, bp.height, bp.bits_per_pixel, bp.compression,
+            sum(flat), min(flat), max(flat),
+        )
 
-    return df.mapInPandas(decode, schema=out_schema)
+    return map_rows(df, decode, out_schema)
 
 
 def decode_flac_audio_features(
@@ -1104,39 +681,18 @@ def decode_flac_audio_features(
     algorithmic, no codec tables). Emits stream fields + the integer
     clip features over channel 0 — same shape as the PCM path, so a
     corpus filter treats WAV and FLAC uniformly."""
-    from appengine_mapreduce_spark.functions.flac import decode_flac
-
     out_schema = (
         f"{id_col} bigint, n_channels int, sample_rate int, "
         "n_samples bigint, sum_sq bigint, peak int, zero_crossings bigint"
     )
     df = ensure_parallelism(df.select(id_col, content_col))
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, blob in zip(pdf[id_col], pdf[content_col]):
-                info, channels = decode_flac(bytes(blob))
-                n, sum_sq, peak, zc = _pcm_feature_row(channels[0])
-                rows.append((int(i), info.n_channels, info.sample_rate,
-                             n, sum_sq, peak, zc))
-            yield (
-                pd.DataFrame(rows, columns=[
-                    id_col, "n_channels", "sample_rate", "n_samples",
-                    "sum_sq", "peak", "zero_crossings"])
-                if rows
-                else pd.DataFrame({
-                    id_col: pd.Series(dtype="int64"),
-                    "n_channels": pd.Series(dtype="int32"),
-                    "sample_rate": pd.Series(dtype="int32"),
-                    "n_samples": pd.Series(dtype="int64"),
-                    "sum_sq": pd.Series(dtype="int64"),
-                    "peak": pd.Series(dtype="int32"),
-                    "zero_crossings": pd.Series(dtype="int64"),
-                })
-            )
+    def decode(i, blob):
+        info, channels = decode_flac(bytes(blob))
+        yield (int(i), info.n_channels, info.sample_rate,
+               *_pcm_feature_row(channels[0]))
 
-    return df.mapInPandas(decode, schema=out_schema)
+    return map_rows(df, decode, out_schema)
 
 
 def decode_mrle_video_stats(
@@ -1150,48 +706,26 @@ def decode_mrle_video_stats(
     frames, not the wire diffs (functions/media.decode_avi_mrle_frames).
     Motion-compensated codecs (H.264/VP9) remain behind
     DECODERS_AVAILABLE; run-length temporal video does not."""
-    from appengine_mapreduce_spark.functions.media import (
-        decode_avi_mrle_frames,
-    )
-
     out_schema = (
         f"{id_col} bigint, n_frames int, width int, height int, "
         "rgb_sum bigint, px_min int, px_max int"
     )
     df = ensure_parallelism(df.select(id_col, content_col))
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, blob in zip(pdf[id_col], pdf[content_col]):
-                meta, palette, frames = decode_avi_mrle_frames(bytes(blob))
-                rgb_sum = 0
-                mn, mx = 255, 0
-                for fr in frames:
-                    for idx in fr:
-                        r, g, b = palette[idx]
-                        rgb_sum += r + g + b
-                        lo, hi = min(r, g, b), max(r, g, b)
-                        mn = lo if lo < mn else mn
-                        mx = hi if hi > mx else mx
-                rows.append((
-                    int(i), meta.n_frames, meta.width, meta.height,
-                    rgb_sum, mn if frames else 0, mx if frames else 0,
-                ))
-            yield (
-                pd.DataFrame(rows, columns=[
-                    id_col, "n_frames", "width", "height",
-                    "rgb_sum", "px_min", "px_max"])
-                if rows
-                else pd.DataFrame({
-                    id_col: pd.Series(dtype="int64"),
-                    "n_frames": pd.Series(dtype="int32"),
-                    "width": pd.Series(dtype="int32"),
-                    "height": pd.Series(dtype="int32"),
-                    "rgb_sum": pd.Series(dtype="int64"),
-                    "px_min": pd.Series(dtype="int32"),
-                    "px_max": pd.Series(dtype="int32"),
-                })
-            )
+    def decode(i, blob):
+        meta, palette, frames = decode_avi_mrle_frames(bytes(blob))
+        rgb_sum = 0
+        mn, mx = 255, 0
+        for fr in frames:
+            for idx in fr:
+                r, g, b = palette[idx]
+                rgb_sum += r + g + b
+                lo, hi = min(r, g, b), max(r, g, b)
+                mn = lo if lo < mn else mn
+                mx = hi if hi > mx else mx
+        yield (
+            int(i), meta.n_frames, meta.width, meta.height,
+            rgb_sum, mn if frames else 0, mx if frames else 0,
+        )
 
-    return df.mapInPandas(decode, schema=out_schema)
+    return map_rows(df, decode, out_schema)

@@ -28,9 +28,6 @@ from typing import Any
 
 from pyspark.sql import DataFrame
 
-from appengine_mapreduce_spark.core.pickling import register_self
-
-register_self(__name__)
 
 PUT = "put"
 DELETE = "delete"

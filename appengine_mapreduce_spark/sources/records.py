@@ -28,10 +28,8 @@ from __future__ import annotations
 import io
 import struct
 from collections.abc import Iterator
-from appengine_mapreduce_spark.core.pickling import register_self
 
-register_self(__name__)
-
+from appengine_mapreduce_spark.core.adapters import map_rows
 
 BLOCK_SIZE = 32768
 HEADER_SIZE = 7
@@ -190,28 +188,15 @@ def records_output(df, out_dir: str, record_col: str = "record") -> int:
 def records_input(spark, path: str):
     """Distributed scan of LevelDB record files → DataFrame[file, record].
 
-    Whole-file decode via ``binaryFile`` + ``mapInPandas``; one file per
+    Whole-file decode via ``binaryFile`` + ``map_rows``; one file per
     task (record files from the reference are one-per-shard and modest —
     256 KB-aligned GCS uploads)."""
-    import pandas as pd
-
     bins = spark.read.format("binaryFile").load(path)
 
-    def decode(batches):
-        for pdf in batches:
-            rows = []
-            for p, content in zip(pdf["path"], pdf["content"]):
-                for rec in RecordReader(io.BytesIO(bytes(content))):
-                    rows.append((p, rec))
-            yield (
-                pd.DataFrame(rows, columns=["file", "record"])
-                if rows
-                else pd.DataFrame(
-                    {"file": pd.Series(dtype="object"),
-                     "record": pd.Series(dtype="object")}
-                )
-            )
+    def decode(p, content):
+        for rec in RecordReader(io.BytesIO(bytes(content))):
+            yield p, rec
 
-    return bins.select("path", "content").mapInPandas(
-        decode, schema="file string, record binary"
+    return map_rows(
+        bins.select("path", "content"), decode, "file string, record binary"
     )

@@ -7,23 +7,19 @@ members of one zip by TOC index range; ``BlobstoreZipLineInputReader``
 
 Spark: ``binaryFile`` scans the archives (one partition per archive —
 archives themselves are the natural split unit, matching the reference's
-TOC-range sharding), and a ``mapInPandas`` stage opens each with the
-stdlib ``zipfile``. Python is unavoidable here (no JVM zip source), but it
-runs per archive member, not per record — the line split is vectorized.
+TOC-range sharding), and a ``map_rows`` stage opens each with the stdlib
+``zipfile``. Python is unavoidable here (no JVM zip source); it runs once
+per archive and once per member.
 """
 
 from __future__ import annotations
 
 import io
 import zipfile
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from appengine_mapreduce_spark.core.pickling import register_self
 
-register_self(__name__)
-
+from appengine_mapreduce_spark.core.adapters import map_rows
 
 _MEMBER_SCHEMA = "zip_path string, member_index int, member_name string, content binary"
 _LINE_SCHEMA = "zip_path string, member_index int, offset bigint, line string"
@@ -35,23 +31,13 @@ def zip_members(spark: SparkSession, path: str) -> DataFrame:
     input_readers.py:1497-1510 iterates zipfile.infolist order)."""
     bins = spark.read.format("binaryFile").load(path)
 
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for p, content in zip(pdf["path"], pdf["content"]):
-                with zipfile.ZipFile(io.BytesIO(content)) as zf:
-                    for idx, info in enumerate(zf.infolist()):
-                        if info.is_dir():
-                            continue
-                        rows.append((p, idx, info.filename, zf.read(info)))
-            yield pd.DataFrame(
-                rows, columns=["zip_path", "member_index", "member_name", "content"]
-            ) if rows else pd.DataFrame(
-                {c: pd.Series(dtype="object") for c in
-                 ["zip_path", "member_index", "member_name", "content"]}
-            )
+    def extract(p, content):
+        with zipfile.ZipFile(io.BytesIO(content)) as zf:
+            for idx, info in enumerate(zf.infolist()):
+                if not info.is_dir():
+                    yield p, idx, info.filename, zf.read(info)
 
-    return bins.select("path", "content").mapInPandas(extract, schema=_MEMBER_SCHEMA)
+    return map_rows(bins.select("path", "content"), extract, _MEMBER_SCHEMA)
 
 
 def zip_member_lines(spark: SparkSession, path: str, encoding: str = "utf-8") -> DataFrame:
@@ -60,28 +46,13 @@ def zip_member_lines(spark: SparkSession, path: str, encoding: str = "utf-8") ->
     (input_readers.py:1604-1830)."""
     members = zip_members(spark, path)
 
-    def split_lines(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for zp, idx, content in zip(
-                pdf["zip_path"], pdf["member_index"], pdf["content"]
-            ):
-                offset = 0
-                for raw in bytes(content).splitlines(keepends=True):
-                    line = raw.rstrip(b"\r\n")
-                    rows.append((zp, int(idx), offset, line.decode(encoding)))
-                    offset += len(raw)
-            yield pd.DataFrame(
-                rows, columns=["zip_path", "member_index", "offset", "line"]
-            ) if rows else pd.DataFrame(
-                {
-                    "zip_path": pd.Series(dtype="object"),
-                    "member_index": pd.Series(dtype="int32"),
-                    "offset": pd.Series(dtype="int64"),
-                    "line": pd.Series(dtype="object"),
-                }
-            )
+    def split_lines(zp, idx, content):
+        offset = 0
+        for raw in bytes(content).splitlines(keepends=True):
+            yield zp, int(idx), offset, raw.rstrip(b"\r\n").decode(encoding)
+            offset += len(raw)
 
-    return members.select("zip_path", "member_index", "content").mapInPandas(
-        split_lines, schema=_LINE_SCHEMA
+    return map_rows(
+        members.select("zip_path", "member_index", "content"), split_lines,
+        _LINE_SCHEMA,
     )

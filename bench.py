@@ -658,24 +658,6 @@ def _run_seam_probe(
       amortized. This carries the ≥1M rec/s floor
       (tests/test_throughput.py asserts the drift-adjusted figure)."""
 
-    def _cpu_stat() -> "tuple[int, int, int]":
-        # steal, idle (jiffies), io-stall (µs from PSI /proc/pressure/io
-        # "full total" — round-11 finding: the box accumulates whole
-        # SECONDS of full io-stall; shared-host disk writeback is the
-        # Mode B mechanism candidate, now attributable per run)
-        try:
-            f = open("/proc/stat").readline().split()
-            steal, idle = int(f[8]), int(f[4])
-        except Exception:
-            steal, idle = -1, -1
-        io_us = -1
-        try:
-            for line in open("/proc/pressure/io"):
-                if line.startswith("full"):
-                    io_us = int(line.rsplit("total=", 1)[1])
-        except Exception:
-            pass
-        return steal, idle, io_us
     from pyspark.sql.types import StructType
 
     from appengine_mapreduce_spark.core.adapters import run_mapper

@@ -2,10 +2,12 @@
 
 A driver imports this package into a SparkSession it builds itself, with
 no ``PYTHONPATH`` for the executor Python workers. Every worker closure
-must therefore be pickled by value (``core/pickling.register_self``).
+must therefore be pickled by value: the package registers itself with
+``cloudpickle.register_pickle_by_value`` once, in its ``__init__``, and
+worker code may import nothing from the package at call time.
 ``conftest.py`` exports ``PYTHONPATH`` for the in-process session, which
-would hide a missing registration, so these tests run the job in a fresh
-interpreter with ``PYTHONPATH`` unset.
+would hide a missing registration, so these tests run their Spark work in
+a fresh interpreter with ``PYTHONPATH`` unset.
 """
 
 from __future__ import annotations
@@ -14,6 +16,9 @@ import json
 import os
 import subprocess
 import sys
+
+from appengine_mapreduce_spark.plans import all_queries
+from tests.conftest import SF_SMOKE
 
 _REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -70,18 +75,48 @@ print(json.dumps({"written": result.output, "counters": result.counters}))
 '''
 
 
-def test_mutation_sink_without_pythonpath_survives_a_retried_task(tmp_path):
+# Every registry query tagged ``udf`` runs Python on the workers. A query
+# that fails reports its error in place of its row count.
+_UDF_QUERIES = '''
+import json, sys
+
+repo, sf_dir = sys.argv[1], sys.argv[2]
+sys.path.insert(0, repo)
+
+from pyspark.sql import SparkSession
+
+from appengine_mapreduce_spark.plans import all_queries
+
+spark = (SparkSession.builder.master("local[4]")
+         .config("spark.ui.enabled", "false").getOrCreate())
+counts = {}
+for name, spec in all_queries().items():
+    if "udf" in spec.tags:
+        try:
+            counts[name] = spec.fn(spark, sf_dir).count()
+        except Exception as exc:
+            counts[name] = f"{type(exc).__name__}: {str(exc)[-500:]}"
+spark.stop()
+print(json.dumps(counts))
+'''
+
+
+def _run_without_pythonpath(tmp_path, source: str, *args: str) -> dict:
     script = tmp_path / "job.py"
-    script.write_text(_MUTATION_JOB)
-    out_dir = tmp_path / "applied"
-    out_dir.mkdir()
+    script.write_text(source)
     env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
     proc = subprocess.run(
-        [sys.executable, str(script), _REPO_ROOT, str(out_dir)],
-        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=600,
+        [sys.executable, str(script), _REPO_ROOT, *args],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=900,
     )
     assert proc.returncode == 0, proc.stderr[-4000:]
-    got = json.loads(proc.stdout.strip().splitlines()[-1])
+    return json.loads(proc.stdout.strip().splitlines()[-1])
+
+
+def test_mutation_sink_without_pythonpath_survives_a_retried_task(tmp_path):
+    out_dir = tmp_path / "applied"
+    out_dir.mkdir()
+    got = _run_without_pythonpath(tmp_path, _MUTATION_JOB, str(out_dir))
 
     assert (out_dir / "injected-failure").exists(), "the fault was never injected"
     assert got["written"] == 7
@@ -90,3 +125,13 @@ def test_mutation_sink_without_pythonpath_survives_a_retried_task(tmp_path):
     for f in out_dir.glob("*.applied"):
         applied.extend(int(k) for k in f.read_text().split())
     assert sorted(applied) == list(range(7))
+
+
+def test_udf_queries_without_pythonpath_match_in_process_counts(spark, tmp_path):
+    got = _run_without_pythonpath(tmp_path, _UDF_QUERIES, SF_SMOKE)
+    want = {
+        name: spec.fn(spark, SF_SMOKE).count()
+        for name, spec in all_queries().items()
+        if "udf" in spec.tags
+    }
+    assert got == want

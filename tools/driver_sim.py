@@ -10,7 +10,6 @@ long-lived session over all ~177 queries at sf1 degrades partway
 environmentally — fresh-session re-checks of the same names MATCH (see
 PARITY_r07.md's caveat). tools/parity_sweep.py drives one fresh
 process per chunk and aggregates a single ALL-OK artifact."""
-import hashlib
 import json
 import sys
 
@@ -37,6 +36,7 @@ spark.sparkContext.setLogLevel("ERROR")
 import duckdb
 
 import __spark_entry__ as entrymod
+from check_subset import value_hash  # tools/ is sys.path[0] when run as a script
 
 # default = the driver's gate SF; override to re-prove parity at scale
 # (e.g. SPARK_GRAFT_SIM_SF=/root/testdata/sf0.1)
@@ -44,21 +44,6 @@ SF = _os.environ.get("SPARK_GRAFT_SIM_SF", "/root/testdata/sf0.01")
 conn = duckdb.connect()
 for t in ["region","nation","customer","supplier","part","orders","lineitem","events","documents","embeddings"]:
     conn.execute(f"CREATE OR REPLACE VIEW {t} AS SELECT * FROM read_parquet('{SF}/{t}.parquet')")
-
-
-def value_hash(pdf):
-    pdf = pdf.reindex(sorted(pdf.columns), axis=1)
-    rows = []
-    for tup in pdf.itertuples(index=False):
-        cells = []
-        for v in tup:
-            if isinstance(v, float):
-                cells.append(f"{v:.9g}")
-            else:
-                cells.append(str(v))
-        rows.append("|".join(cells))
-    rows.sort()
-    return hashlib.md5("\n".join(rows).encode()).hexdigest()
 
 
 _chunk = _os.environ.get("SPARK_GRAFT_SIM_CHUNK")  # "i/N" or unset

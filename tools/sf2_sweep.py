@@ -34,6 +34,8 @@ import sys
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
+import bench  # host-noise probes only; no session in this process
+
 _CHILD_CODE = """
 import sys, json
 sys.path.insert(0, {repo!r})
@@ -160,46 +162,6 @@ print("@@RESULT@@" + json.dumps(out))
 _PHASE_CPU: "dict[str, dict]" = {}
 
 
-def _cpu_stat() -> "tuple[int, int, int]":
-    # steal, idle (jiffies), io-stall (µs, PSI /proc/pressure/io "full
-    # total") — round-11: the box shows whole SECONDS of accumulated full
-    # io-stall; shared-host disk writeback stalls are a distinct burst
-    # mode from CPU steal, and in-suite sf2 wobble correlates with
-    # neither steal nor JVM GC — record all three so the artifact
-    # attributes each phase.
-    try:
-        f = open("/proc/stat").readline().split()
-        steal, idle = int(f[8]), int(f[4])
-    except Exception:
-        steal, idle = -1, -1
-    io_us = -1
-    try:
-        for line in open("/proc/pressure/io"):
-            if line.startswith("full"):
-                io_us = int(line.rsplit("total=", 1)[1])
-    except Exception:
-        pass
-    return steal, idle, io_us
-
-
-def _pretouch(sf_dir: str) -> None:
-    """Stream the fixture's parquet through the page cache before a
-    timed child. Round-13 sf8 finding: this host pins page cache at
-    ~4 GB, so a fresh child's first pass pays partially-cold reads at
-    whatever the SF's byte size is — at 2-6 s query runtimes that IO
-    term swamped the doubling signal (>50% swing between identical
-    children). The warmup round inside the child does NOT fully absorb
-    it (shuffle/JVM churn evicts). Exponents should measure compute,
-    not cold disk — so warm the files, and let the artifact's
-    io_stall_us_d show any residual."""
-    import glob as _glob
-
-    for p in sorted(_glob.glob(os.path.join(sf_dir, "*.parquet"))):
-        with open(p, "rb") as fh:
-            while fh.read(1 << 24):
-                pass
-
-
 def _child(code_tmpl: str, sf_dir: str, label: str,
            queries: "tuple | None" = None) -> dict:
     if queries is not None and not queries:
@@ -209,7 +171,7 @@ def _child(code_tmpl: str, sf_dir: str, label: str,
         raise SystemExit(
             f"phase {label}: empty query list — the artifact being "
             "redone has no anchors recorded for this phase")
-    _pretouch(sf_dir)
+    bench._pretouch(sf_dir)
     code = code_tmpl.format(repo=REPO, sf_dir=sf_dir, label=label,
                             noop_queries=(_NOOP_QUERIES if queries is None
                                           else queries),
@@ -220,12 +182,12 @@ def _child(code_tmpl: str, sf_dir: str, label: str,
     # — the same Mode A the seam probe instruments. Sampling /proc/stat
     # around each child makes contamination visible IN the artifact, so
     # a reader (or a re-run decision) never needs an out-of-band probe.
-    s0, i0, io0 = _cpu_stat()
+    s0, i0, io0 = bench._cpu_stat()
     t0 = __import__("time").time()
     proc = subprocess.run(
         [sys.executable, "-c", code], stdout=subprocess.PIPE, timeout=3600)
     wall = __import__("time").time() - t0
-    s1, i1, io1 = _cpu_stat()
+    s1, i1, io1 = bench._cpu_stat()
     _PHASE_CPU[label] = {
         "wall_sec": round(wall, 1),
         "steal_d": s1 - s0 if s0 >= 0 else -1,
@@ -405,8 +367,6 @@ def main() -> None:
     if needs_sf4 and not os.path.isdir(sf4_dir):
         raise SystemExit(f"missing sf4 fixture {sf4_dir} — run "
                          "tools/gen_sf.py --mult 40 first")
-    import bench  # for _round_number only — no session in this process
-
     if redo:
         artifact = os.path.join(
             REPO, f"BENCH_SF2_r{bench._round_number()}.json")
